@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from puddin_spark.pipeline import flip_verdicts_by_id
+
 
 def exact_dedup(df: DataFrame, text_col: str = "text", order_cols: tuple = ("doc_id",)) -> DataFrame:
     """Keep-first exact dedup via digest window. Only the digest shuffles."""
@@ -427,9 +429,9 @@ def apply_decontamination_gate(
 ) -> DataFrame:
     """Decontamination as a verdict gate composing AFTER the rule battery
     (the apply_quality_gate/apply_toxicity_gate contract): kept docs
-    sharing any word n-gram with `eval_docs` flip to keep=false with
-    excl_type='contaminated' (clean_text nulled); already-dropped docs
-    pass through untouched. The flag join is `decontaminate`'s broadcast
+    sharing any word n-gram with `eval_docs` flip (flip_verdicts_by_id)
+    to excl_type='contaminated'; already-dropped docs pass through
+    untouched. The flag join is `decontaminate`'s broadcast
     probe — document bodies never shuffle."""
     flagged = decontaminate(
         verdicts.filter("keep").select("doc_id", text_col),
@@ -438,19 +440,8 @@ def apply_decontamination_gate(
         id_col="doc_id",
         text_col=text_col,
         eval_text_col=eval_text_col,
-    ).select(F.col("id").alias("doc_id"), F.lit(True).alias("_cont"))
-    keep_cols = verdicts.columns
-    out = verdicts.join(flagged, "doc_id", "left").select(
-        *[c for c in keep_cols if c not in ("keep", "excl_type", text_col)],
-        F.when(F.col("_cont"), F.lit(None).cast("string"))
-        .otherwise(F.col(text_col))
-        .alias(text_col),
-        (F.col("keep") & F.col("_cont").isNull()).alias("keep"),
-        F.when(F.col("_cont"), F.lit("contaminated"))
-        .otherwise(F.col("excl_type"))
-        .alias("excl_type"),
-    )
-    return out.select(*keep_cols)
+    ).select(F.col("id").alias("doc_id"))
+    return flip_verdicts_by_id(verdicts, flagged, "contaminated")
 
 
 def repeated_spans(
@@ -591,9 +582,9 @@ def apply_repeated_span_gate(
 ) -> DataFrame:
     """Repeated-span hygiene as a doc-level verdict gate (the
     apply_quality_gate/apply_decontamination_gate contract): kept docs
-    with MORE than `max_flagged` duplicated-span occurrences flip to
-    keep=false with excl_type='dup_spans' (clean_text nulled);
-    already-dropped docs pass through untouched. The RefinedWeb-style
+    with MORE than `max_flagged` duplicated-span occurrences flip
+    (flip_verdicts_by_id) to excl_type='dup_spans'; already-dropped docs
+    pass through untouched. The RefinedWeb-style
     document-drop policy — use `trim_repeated_spans` instead when the
     policy is to salvage documents by cutting the spans out."""
     flagged = (
@@ -608,20 +599,9 @@ def apply_repeated_span_gate(
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("_nspans"))
         .where(F.col("_nspans") > max_flagged)
-        .select(F.col("id").alias("doc_id"), F.lit(True).alias("_dup"))
+        .select(F.col("id").alias("doc_id"))
     )
-    keep_cols = verdicts.columns
-    out = verdicts.join(flagged, "doc_id", "left").select(
-        *[c for c in keep_cols if c not in ("keep", "excl_type", text_col)],
-        F.when(F.col("_dup"), F.lit(None).cast("string"))
-        .otherwise(F.col(text_col))
-        .alias(text_col),
-        (F.col("keep") & F.col("_dup").isNull()).alias("keep"),
-        F.when(F.col("_dup"), F.lit("dup_spans"))
-        .otherwise(F.col("excl_type"))
-        .alias("excl_type"),
-    )
-    return out.select(*keep_cols)
+    return flip_verdicts_by_id(verdicts, flagged, "dup_spans")
 
 
 def ngram_jaccard_pairs(

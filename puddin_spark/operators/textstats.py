@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from puddin_spark.pipeline import flip_verdicts
+
 # small English function-word profile for the n-gram/stopword heuristic
 EN_STOPWORDS = (
     "the of and to in a is that it was for on are as with his they at be this "
@@ -97,10 +99,10 @@ def apply_quality_gate(
     verdicts: DataFrame, min_score: float, text_col: str = "clean_text"
 ) -> DataFrame:
     """Model-tier quality filter composing AFTER the rule battery: kept
-    docs scoring under `min_score` flip to keep=false with
-    excl_type='low_quality' (clean_text nulled per the verdict contract);
-    already-dropped docs pass through untouched. Pure codegen projection —
-    no shuffle, no Python — so it rides the same stage as the sink write.
+    docs scoring under `min_score` flip (flip_verdicts) to
+    excl_type='low_quality'; already-dropped docs pass through untouched.
+    Pure codegen projection — no shuffle, no Python — so it rides the same
+    stage as the sink write.
     """
     score = (
         F.least(F.round(stopword_ratio_col(text_col), 6) * 2, F.lit(1.0)) * 0.5
@@ -111,23 +113,7 @@ def apply_quality_gate(
             0.2,
         ).otherwise(0.0)
     )
-    low = F.col("keep") & (F.round(score, 6) < min_score)
-    keep_cols = verdicts.columns
-    out = verdicts.withColumn("_low", low).select(
-        *[
-            c
-            for c in keep_cols
-            if c not in ("keep", "excl_type", text_col)
-        ],
-        F.when(F.col("_low"), F.lit(None).cast("string"))
-        .otherwise(F.col(text_col))
-        .alias(text_col),
-        (F.col("keep") & ~F.col("_low")).alias("keep"),
-        F.when(F.col("_low"), F.lit("low_quality"))
-        .otherwise(F.col("excl_type"))
-        .alias("excl_type"),
-    )
-    return out.select(*keep_cols)  # original column order
+    return flip_verdicts(verdicts, F.round(score, 6) < min_score, "low_quality")
 
 
 def toxicity_pattern() -> str:
@@ -176,26 +162,13 @@ def apply_toxicity_gate(
 ) -> DataFrame:
     """Toxicity filter composing AFTER the rule battery (mirror of
     apply_quality_gate): kept docs whose toxic-token ratio exceeds
-    `max_ratio` flip to keep=false with excl_type='toxic' (clean_text
-    nulled per the verdict contract). Pure codegen projection — no
-    shuffle, no Python."""
+    `max_ratio` flip (flip_verdicts) to excl_type='toxic'. Pure codegen
+    projection — no shuffle, no Python."""
     hits = _toxicity_hits_col(text_col)
     ratio = F.round(
         hits / F.greatest(token_count_col(text_col), F.lit(1)), 6
     )
-    tox = F.col("keep") & (ratio > max_ratio)
-    keep_cols = verdicts.columns
-    out = verdicts.withColumn("_tox", tox).select(
-        *[c for c in keep_cols if c not in ("keep", "excl_type", text_col)],
-        F.when(F.col("_tox"), F.lit(None).cast("string"))
-        .otherwise(F.col(text_col))
-        .alias(text_col),
-        (F.col("keep") & ~F.col("_tox")).alias("keep"),
-        F.when(F.col("_tox"), F.lit("toxic"))
-        .otherwise(F.col("excl_type"))
-        .alias("excl_type"),
-    )
-    return out.select(*keep_cols)
+    return flip_verdicts(verdicts, ratio > max_ratio, "toxic")
 
 
 # Gopher / MassiveText (Rae et al. 2021, table A1) document-quality rules.
@@ -281,25 +254,14 @@ def apply_gopher_gate(
     max_words: int = 100_000,
 ) -> DataFrame:
     """Gopher rule battery composing AFTER the puddin rules (mirror of
-    apply_quality_gate): kept docs failing any MassiveText rule flip to
-    keep=false with excl_type='gopher' (clean_text nulled per the verdict
-    contract). Pure codegen projection — no shuffle, no Python."""
+    apply_quality_gate): kept docs failing any MassiveText rule flip
+    (flip_verdicts) to excl_type='gopher'. Pure codegen projection — no
+    shuffle, no Python."""
     keep_cols = verdicts.columns
     scored = gopher_columns(
         verdicts, text_col, min_words=min_words, max_words=max_words
     )
-    bad = F.col("keep") & ~F.col("gopher_keep")
-    out = scored.withColumn("_gbad", bad).select(
-        *[c for c in keep_cols if c not in ("keep", "excl_type", text_col)],
-        F.when(F.col("_gbad"), F.lit(None).cast("string"))
-        .otherwise(F.col(text_col))
-        .alias(text_col),
-        (F.col("keep") & ~F.col("_gbad")).alias("keep"),
-        F.when(F.col("_gbad"), F.lit("gopher"))
-        .otherwise(F.col("excl_type"))
-        .alias("excl_type"),
-    )
-    return out.select(*keep_cols)
+    return flip_verdicts(scored, ~F.col("gopher_keep"), "gopher").select(*keep_cols)
 
 
 # C4 (Raffel et al. 2020, §2.2) web-page cleaning. Line-level: keep only
@@ -365,29 +327,21 @@ def apply_c4_gate(
     min_sentences: int = 3,
 ) -> DataFrame:
     """C4 cleaning composed AFTER the puddin rules: kept pages failing the
-    page-level rules flip to keep=false with excl_type='c4' (clean_text
-    nulled per the verdict contract); kept survivors get their text
-    REWRITTEN to the retained lines (C4 removes bad lines, not just bad
-    pages — same text-rewriting shape as dedup.trim_repeated_spans).
-    Pure codegen projection — no shuffle, no Python."""
+    page-level rules flip (flip_verdicts) to excl_type='c4'; kept
+    survivors get their text REWRITTEN to the retained lines first (C4
+    removes bad lines, not just bad pages — same text-rewriting shape as
+    dedup.trim_repeated_spans). Pure codegen projection — no shuffle, no
+    Python."""
     keep_cols = verdicts.columns
     scored = c4_columns(
         verdicts, text_col,
         min_line_words=min_line_words, min_sentences=min_sentences,
     )
-    bad = F.col("keep") & ~F.col("c4_keep")
-    out = scored.withColumn("_cbad", bad).select(
-        *[c for c in keep_cols if c not in ("keep", "excl_type", text_col)],
-        F.when(F.col("_cbad"), F.lit(None).cast("string"))
-        .when(F.col("keep"), F.col("c4_text"))
-        .otherwise(F.col(text_col))
-        .alias(text_col),
-        (F.col("keep") & ~F.col("_cbad")).alias("keep"),
-        F.when(F.col("_cbad"), F.lit("c4"))
-        .otherwise(F.col("excl_type"))
-        .alias("excl_type"),
+    rewritten = scored.withColumn(
+        text_col,
+        F.when(F.col("keep"), F.col("c4_text")).otherwise(F.col(text_col)),
     )
-    return out.select(*keep_cols)
+    return flip_verdicts(rewritten, ~F.col("c4_keep"), "c4").select(*keep_cols)
 
 
 def perplexity_buckets(

@@ -36,6 +36,37 @@ OUTPUT_COLS = [
 ]
 
 
+def flip_verdicts(verdicts: DataFrame, bad: Column, label: str) -> DataFrame:
+    """The one verdict flip every gate and sidecar goes through: kept rows
+    where `bad` holds become dropped rows — keep=false, excl_type=`label`
+    and clean_text nulled, the verdict contract (a kept row has text and no
+    label, a dropped row a label and no text; validate_run's text_state).
+    Already-dropped rows, and rows where `bad` is false or null, pass
+    through untouched; the column order is kept. A pure projection: no
+    shuffle, no Python."""
+    flip = F.col("_flip")
+    flipped = {
+        "keep": F.when(flip, F.lit(False)).otherwise(F.col("keep")),
+        "excl_type": F.when(flip, F.lit(label)).otherwise(F.col("excl_type")),
+        "clean_text": F.when(flip, F.lit(None).cast("string")).otherwise(
+            F.col("clean_text")
+        ),
+    }
+    marked = verdicts.withColumn("_flip", F.col("keep") & bad)
+    return marked.select(
+        *[flipped.get(c, F.col(c)).alias(c) for c in verdicts.columns]
+    )
+
+
+def flip_verdicts_by_id(verdicts: DataFrame, ids: DataFrame, label: str) -> DataFrame:
+    """flip_verdicts for an id set: `ids` is ONE column of distinct keys,
+    named after the verdict column it matches (doc_id or url). A left join,
+    so Spark/AQE picks broadcast vs shuffle from the set's size."""
+    (key,) = ids.columns
+    marked = verdicts.join(ids.withColumn("_in", F.lit(True)), key, "left")
+    return flip_verdicts(marked, F.col("_in"), label).select(*verdicts.columns)
+
+
 def doc_id_col(url: Column | str = "url") -> Column:
     """Stable document key: sha2(url) (SURVEY.md section 1.4; replaces the
     reference's positional text ids, parse_pile.py:745-788)."""

@@ -34,6 +34,8 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from collections.abc import Callable
+from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -496,35 +498,24 @@ def record_failures(
 ) -> int:
     """Post-hoc doc-level failure recording (F9): the reference appended
     parse-failure rows to its exclusions table AFTER the parse loop
-    (parse_pile.py:1374-1390). Here the verdict flip (keep -> false,
-    excl_type -> 'fail') lands as a new BASE snapshot — the overwrite-
+    (parse_pile.py:1374-1390). Here the verdict flip (flip_verdicts_by_id
+    to excl_type='fail') lands as a new BASE snapshot — the overwrite-
     snapshot shape of table formats like Iceberg — so readers see exactly
     one row per doc and resume semantics are unchanged. Lineage is
     recomputed from the updated verdicts so rule-hit counts include the
     failures. Returns the new snapshot id, or -1 if `failed` is empty.
     """
-    from puddin_spark.pipeline import lineage_table
+    from puddin_spark.pipeline import flip_verdicts_by_id, lineage_table
 
     verdicts = store.read(spark)
     if verdicts is None:
         raise ValueError("record_failures on an empty store")
-    flagged = failed.select("doc_id").distinct().withColumn("_fail", F.lit(True))
+    flagged = failed.select("doc_id").distinct()
     if flagged.isEmpty():
         return -1
     # no forced broadcast: failures are normally tiny (AQE will broadcast),
     # but a mass-failure event must not OOM the driver trying to
-    updated = (
-        verdicts.join(flagged, "doc_id", "left")
-        .withColumn(
-            "keep", F.when(F.col("_fail"), F.lit(False)).otherwise(F.col("keep"))
-        )
-        .withColumn(
-            "excl_type",
-            F.when(F.col("_fail"), F.lit(excl_type)).otherwise(F.col("excl_type")),
-        )
-        .drop("_fail")
-        .select(*verdicts.columns)
-    )
+    updated = flip_verdicts_by_id(verdicts, flagged, excl_type)
     lineage = lineage_table(updated, num_partitions=num_partitions).withColumn(
         "snapshot_id", F.lit(store.current_snapshot_id() + 1)
     )
@@ -539,16 +530,14 @@ def _prune_near_dedup_sidecar(spark, store: SnapshotStore, verdicts: DataFrame) 
     """Keep the near-dedup indexes consistent with a verdict flip: entries
     for now-excluded docs would otherwise keep dropping future newcomers as
     near-dups of documents no longer in the corpus — both copies lost — and
-    the ingest-time reconciliation gate would re-fire forever. Prunes each
-    signature index (minhash AND srp) to the current kept id set as a base
-    commit; the minhash band table (a derived cache) is left to its
-    row-count gate, which rebuilds it from the pruned index by projection
-    on the next ingest. No-op for any sidecar that was never enabled."""
+    the ingest-time reconciliation gate would re-fire forever. Prunes every
+    sidecar's signature index to the current kept id set as a base commit;
+    the band caches are left to their row-count gates, which rebuild them
+    from the pruned indexes by projection on the next ingest. No-op for any
+    sidecar that was never enabled."""
     kept = verdicts.filter("keep").select(F.col("doc_id").alias("id"))
-    # band caches (minhash_bands, srp_bands) are left to their row-count
-    # gates, which rebuild them from the pruned indexes by projection
-    for name, part in (("minhash_index", None), ("srp_index", None)):
-        idx_base = store.base / name
+    for spec in NEAR_DUP_SIDECARS:
+        idx_base = store.base / spec.index
         if not (idx_base / "_commits").exists() or not any(
             (idx_base / "_commits").glob("*.json")
         ):
@@ -557,9 +546,7 @@ def _prune_near_dedup_sidecar(spark, store: SnapshotStore, verdicts: DataFrame) 
         idx = idx_store.read(spark)
         if idx is None:
             continue
-        idx_store.commit(
-            idx.join(kept, "id", "left_semi"), base=True, partition_by=part
-        )
+        idx_store.commit(idx.join(kept, "id", "left_semi"), base=True)
 
 
 def run_resumable_pipeline(
@@ -590,50 +577,16 @@ def run_resumable_pipeline(
     """One resumable pipeline run: process only not-yet-committed urls,
     commit verdicts + per-partition lineage atomically.
 
-    near_dedup=True additionally fuzzy-dedups each batch against every
-    PRIOR batch: a minhash index (shingles + signatures of surviving kept
-    docs) is maintained in a sibling snapshot store at <base>/minhash_index,
-    with its exploded LSH band table — directory-partitioned by band-key
-    prefix for per-batch file pruning — in <base>/minhash_bands. New docs
-    near-duplicating an indexed doc — or losing keep-first within the
-    batch's own near-dup clusters — flip to keep=false with
-    excl_type='near_dup' BEFORE the commit, and only survivors join the
-    index. Per-batch cost scales with the batch (the committed corpus is
-    never re-shingled or re-paired, and the band scan reads only the
-    batch's prefix partitions; incremental_minhash_pairs). This is the
-    near-dup analog of the exact text_sha resume dedup below; off by
-    default because 'near_dup' is a graft-axis label the reference doesn't
-    emit. Consistency is self-healing without a 2-phase commit: a
-    (count, xor-of-ids) gate reconciles the index against the committed
-    kept set in BOTH directions (crash-lag re-index AND stale-entry prune
-    after record_failures/rollback), landed as a base commit so the repair
-    runs once; the band cache rebuilds from the index by projection. Both
-    sidecars share the verdict store's compact()/gc() lifecycle (CLI
-    `compact` runs the verdict store plus all four sidecars).
-
-    embedding_near_dedup=True is the EMBEDDING-space analog: each batch's
-    kept docs are encoded (models.doc_embedding_udf — the
-    sentence-transformer seam's deterministic stand-in) into an (id, v)
-    index at <base>/srp_index, with its banded SRP key cache —
-    directory-partitioned by bucket prefix so each batch's committed-side
-    scan prunes to its own prefix partitions — at <base>/srp_bands
-    (similarity.incremental_srp_band_pairs — new-vs-committed and
-    new-vs-new only, the corpus is never re-encoded or re-paired).
-    Newcomers with cosine >= 0.99 of an indexed doc — or keep-first losers
-    within the batch's own clusters — flip to excl_type='emb_near_dup'
-    before the commit. Same reconciliation gate, commit ordering, and compact()/gc()
-    lifecycle as the minhash sidecar; composes with near_dedup=True
-    (minhash flips land first, the embedding pass sees only survivors).
-    The index is BANDED (srp_bands bucket keys per doc, each from a
-    disjoint srp_planes-plane family; candidates share ANY band key) so
-    near-twin recall stays high while random collisions per band scale as
-    N/2^planes — the band table lives at <base>/srp_bands as a derived
-    cache with the minhash band table's lifecycle. srp_planes/srp_bands
-    apply on FIRST use (defaults 16/8; raise planes at larger corpus
-    scales), persist in the sidecar's _meta.json, and later runs must
-    match or omit them — band keys from different configs are
-    incomparable, so a mismatch raises instead of silently generating no
-    candidates.
+    near_dedup=True / embedding_near_dedup=True fuzzy-dedup each batch
+    against every PRIOR batch through the near-dup sidecars (minhash word
+    shingles / SRP-banded document embeddings): newcomers near-duplicating
+    an indexed doc, or losing keep-first within the batch's own clusters,
+    flip to excl_type='near_dup' / 'emb_near_dup' before the commit. Both
+    run one lifecycle, documented on NearDupSidecar; with both on, minhash
+    runs first and the embedding pass sees only its survivors. Off by
+    default: the labels are graft-axis, the reference doesn't emit them.
+    srp_planes/srp_bands configure the SRP band keys on first use and are
+    persisted (_srp_meta): later runs must match or omit them.
 
     fix_mojibake=True repairs double-encoded UTF-8 in the incoming text
     (operators/encoding.py replace chain — pure codegen) BEFORE anything
@@ -683,13 +636,14 @@ def run_resumable_pipeline(
     """
     from puddin_spark.pipeline import lineage_table, quality_pipeline
 
+    sidecars = [MINHASH_SIDECAR] if near_dedup else []
     if embedding_near_dedup:
         # resolve/validate the sidecar band config UP FRONT: a conflicting
         # srp_planes/srp_bands must fail even when this run turns out to be
         # a no-op (the config error is real regardless of batch content)
-        srp_planes, srp_bands = _srp_meta(
-            store.base / "srp_index", srp_planes, srp_bands
-        )
+        sidecars.append(_srp_sidecar(*_srp_meta(
+            store.base / SRP_SIDECAR.index, srp_planes, srp_bands
+        )))
     # one scan of the commit history serves both anti-joins (url, then
     # text digest). The digest join is the global keep-first dedup across
     # runs: a url whose text body was already processed under another url in
@@ -778,27 +732,15 @@ def run_resumable_pipeline(
             verdicts, window=span_window, max_flagged=span_max_flagged
         )
     raw_verdicts = verdicts = verdicts.persist()
-    new_idx = None
     try:
         n_new = verdicts.count()
         if n_new == 0:
             return -1, 0
-        idx_store = bands_store = srp_store = srp_bands_store = None
-        new_srp_idx = new_srp_bands = None
-        mh_occupancy = srp_occupancy = None
-        if near_dedup:
-            verdicts, new_idx, idx_store, bands_store, mh_occupancy = (
-                _apply_near_dedup(spark, store, verdicts, committed)
-            )
-        if embedding_near_dedup:
-            (
-                verdicts, new_srp_idx, new_srp_bands, srp_store,
-                srp_bands_store, srp_occupancy,
-            ) = _apply_embedding_near_dedup(
-                spark, store, verdicts, committed,
-                planes=srp_planes, bands=srp_bands,
-            )
-        if near_dedup or embedding_near_dedup:
+        pending = []
+        for spec in sidecars:
+            verdicts, staged = _near_dedup_pass(spark, store, spec, verdicts, committed)
+            pending.append(staged)
+        if sidecars:
             verdicts = verdicts.persist()
             verdicts.count()  # materialize before committing
         lineage = lineage_table(verdicts, num_partitions=num_partitions).withColumn(
@@ -814,53 +756,7 @@ def run_resumable_pipeline(
             verdicts.drop("proc_ts"), lineage, partition_by=partition_by,
             lineage_stats_cols=["snapshot_id"],
         )
-        if near_dedup and new_idx is not None:
-            # index lands AFTER the verdict commit (see docstring for the
-            # crash-lag recovery); only this batch's surviving kept docs.
-            # Bands land last (pure derived cache; a crash between these
-            # two commits is caught by the row-count gate next batch).
-            from puddin_spark.operators.dedup import (
-                band_table,
-                free_local_checkpoints,
-            )
-
-            if embedding_near_dedup:
-                # the embedding pass ran after minhash and may have flipped
-                # more docs; the minhash index must hold KEPT docs only or
-                # next batch's reconciliation gate re-fires
-                new_idx = new_idx.join(
-                    verdicts.filter("keep").select(F.col("doc_id").alias("id")),
-                    "id",
-                    "left_semi",
-                )
-            idx_store.commit(new_idx)
-            # bands carry the batch's hot-bucket occupancy as LINEAGE — the
-            # no-silent-caps telemetry for LSH degeneracy (band_occupancy)
-            bands_store.commit(
-                band_table(new_idx, **_ND_BAND_KW),
-                lineage=mh_occupancy,
-                partition_by=["band_pfx"],
-            )
-        if embedding_near_dedup and new_srp_idx is not None:
-            # index first, derived band cache last (a crash between the two
-            # commits is caught by the bands row-count gate next batch)
-            srp_store.commit(new_srp_idx)
-            srp_bands_store.commit(
-                new_srp_bands,
-                lineage=srp_occupancy,
-                partition_by=["bucket_pfx"],
-            )
-        if near_dedup or embedding_near_dedup:
-            # ALL sidecar readers are committed — only now release the
-            # batch's signature checkpoints and the drop-set checkpoint
-            # blocks (freeing between the two index commits would drop the
-            # embedding drop-set blocks the srp survivors still read: the
-            # minhash index plan reaches them through `verdicts`)
-            from puddin_spark.operators.dedup import free_local_checkpoints
-
-            for frame in (new_idx, new_srp_idx, new_srp_bands, verdicts):
-                if frame is not None:
-                    free_local_checkpoints(frame)
+        _commit_near_dedup(store, pending, verdicts)
         return snap_id, n_new
     finally:
         verdicts.unpersist()
@@ -870,11 +766,64 @@ def run_resumable_pipeline(
             seen.unpersist()
 
 
-# near-dedup sidecar parameters — ONE definition; the index, its band
-# table, and the incremental pair generation must agree bit-for-bit
-_ND_IDX_KW = dict(num_hashes=16, shingle_k=3, shingle_mode="word")
-_ND_BAND_KW = dict(num_hashes=16, band_size=2, hash_impl="md5")
-_ND_NUM_BANDS = _ND_BAND_KW["num_hashes"] // _ND_BAND_KW["band_size"]
+@dataclass(frozen=True)
+class NearDupSidecar:
+    """One near-dup sidecar: a signature index of the corpus's kept docs
+    at <verdicts>/<index>, and its LSH band table at <verdicts>/<bands> —
+    a pure DERIVED cache of the index (rebuilt by projection, never by
+    re-shingling or re-encoding), directory-partitioned by `pfx_col` so a
+    batch's committed-side scan reads only its own prefix partitions.
+
+    The lifecycle is written once (_near_dedup_pass, _commit_near_dedup);
+    a sidecar supplies only what differs:
+    - build_index: kept (doc_id, clean_text) -> index rows keyed `id`;
+    - build_bands: index -> band rows (id, band, bucket, pfx_col),
+      bands_per_doc of them per doc; checkpoint_bands when the builder is
+      costlier to recompute than to hold (a Python UDF);
+    - occupancy_cols: the (band, bucket) columns of the band rows;
+    - pair(new_idx, new_bands, committed_idx, committed_bands) ->
+      (vs-committed drop ids as `doc_id`, new-vs-new (id_a, id_b) pairs,
+      frames to free once the drop set is materialized).
+
+    Per batch, before the verdict commit:
+    1. heal: an index that outlived its verdict store (store wiped, sidecar
+       left) is pruned to empty — a first batch would otherwise drop
+       newcomers as near-dups of documents absent from the corpus;
+    2. reconcile: a (count, xor-of-ids) gate compares the index with the
+       committed kept set and repairs BOTH directions — stale entries
+       (record_failures, rollback) pruned, crash-lag entries re-indexed
+       from committed clean_text — as one base commit, so the repair runs
+       once; consistency self-heals without a two-phase commit;
+    3. band gate: a row count (bands_per_doc per indexed doc) rebuilds the
+       band cache by projection after an index prune or a crash between
+       the index and bands commits;
+    4. the batch's kept docs are indexed once and banded; the committed
+       bands are pruned to the batch's own prefixes;
+    5. pair: a newcomer near-duplicating a committed doc drops (that doc
+       already shipped); new-vs-new pairs resolve to clusters and every
+       member but the min id drops (keep-first);
+    6. the drop set is checkpointed and the verdicts flip to `label`.
+    Per-batch cost tracks the batch: the committed corpus is never
+    re-indexed or re-paired.
+
+    After the verdict commit, each enabled sidecar commits its new index,
+    then its bands (with the batch's hot-bucket occupancy as lineage),
+    both semi-joined to the FINAL kept ids — so every index holds kept
+    docs only, even when a later sidecar dropped more. A crash between
+    these commits is repaired by the next batch's gates. The batch's
+    checkpoints are freed only after the last sidecar commit. Every store
+    shares the verdict store's compact()/gc() lifecycle (CLI `compact`)."""
+
+    index: str
+    bands: str
+    label: str
+    build_index: Callable[[DataFrame], DataFrame]
+    build_bands: Callable[[DataFrame], DataFrame]
+    bands_per_doc: int
+    pfx_col: str
+    occupancy_cols: tuple[str, str]
+    pair: Callable
+    checkpoint_bands: bool = False
 
 
 def _id_set_stats(df, col: str) -> tuple[int, int]:
@@ -889,48 +838,35 @@ def _id_set_stats(df, col: str) -> tuple[int, int]:
     return row.n, row.fp if row.fp is not None else 0
 
 
-def _heal_stale_sidecar(idx_store: "SnapshotStore", committed_idx):
-    """Guard for a sidecar index that outlived its verdict store (the store
-    was wiped/recreated but `<verdicts>/minhash_index` or `srp_index`
-    survived): the corpus is EMPTY, so deduping a first batch against the
-    leftover index would silently drop newcomers as near-dups of documents
-    that are not in the corpus. Prune the index to empty as a base commit
-    (self-heal, consistent with the (count, xor) reconciliation philosophy)
-    and proceed as a true first run. Returns the healed index (None)."""
-    if committed_idx is not None:
-        idx_store.commit(committed_idx.limit(0), base=True)
-    return None
+def _free(frames) -> None:
+    """Release what a pass held: persisted frames unpersist, localCheckpoint
+    ()ed ones free their blocks (free_local_checkpoints walks the plan's
+    leaves, so it must not see a persisted frame built over live ones)."""
+    from puddin_spark.operators.dedup import free_local_checkpoints
+
+    for frame in frames:
+        if frame.is_cached:
+            frame.unpersist()
+        else:
+            free_local_checkpoints(frame)
 
 
-def _apply_near_dedup(spark, store, verdicts, committed):
-    """Flip near-dup newcomers to keep=false/excl_type='near_dup'; return
-    (updated_verdicts, index_of_survivors, index_store, bands_store,
-    occupancy) — occupancy is the batch's top-K hottest (band, bucket)
-    telemetry (similarity.band_occupancy), committed as the minhash_bands
-    snapshot's lineage. See run_resumable_pipeline(near_dedup=True)."""
-    from puddin_spark.operators.dedup import (
-        band_table,
-        free_local_checkpoints,
-        incremental_minhash_pairs,
-        minhash_index,
-        resolve_duplicate_clusters,
-    )
+def _near_dedup_pass(spark, store, spec: NearDupSidecar, verdicts, committed):
+    """Steps 1-6 of the NearDupSidecar lifecycle for one sidecar. Returns
+    the flipped verdicts and what _commit_near_dedup needs after the
+    verdict commit."""
+    from puddin_spark.operators.dedup import resolve_duplicate_clusters
+    from puddin_spark.operators.similarity import band_occupancy
+    from puddin_spark.pipeline import flip_verdicts_by_id
 
-    idx_store = SnapshotStore(store.base / "minhash_index")
-    bands_store = SnapshotStore(store.base / "minhash_bands")
+    idx_store = SnapshotStore(store.base / spec.index)
+    bands_store = SnapshotStore(store.base / spec.bands)
     committed_idx = idx_store.read(spark)
     if committed is None:
-        committed_idx = _heal_stale_sidecar(idx_store, committed_idx)
-    if committed is not None:
-        # index<->corpus reconciliation, gated by cheap (count, xor-of-ids)
-        # aggregates on both sides. BOTH directions repair here, landed as a
-        # BASE commit so the fix runs once, not on every subsequent batch:
-        # - stale entries (docs flipped keep=false by record_failures /
-        #   rollback / near-dup) are PRUNED — left in place they'd drop
-        #   future newcomers as near-dups of excluded docs (both copies
-        #   lost);
-        # - missing entries (crash between the verdict and index commits)
-        #   are re-indexed from committed clean_text.
+        if committed_idx is not None:  # heal
+            idx_store.commit(committed_idx.limit(0), base=True)
+        committed_idx = None
+    else:
         kept_committed = committed.filter("keep")
         n_kept, fp_kept = _id_set_stats(kept_committed, "doc_id")
         n_idx, fp_idx = (
@@ -938,7 +874,7 @@ def _apply_near_dedup(spark, store, verdicts, committed):
             if committed_idx is not None
             else (0, 0)
         )
-        if (n_idx, fp_idx) != (n_kept, fp_kept):
+        if (n_idx, fp_idx) != (n_kept, fp_kept):  # reconcile
             kept_ids = kept_committed.select(F.col("doc_id").alias("id"))
             pruned = (
                 committed_idx.join(kept_ids, "id", "left_semi")
@@ -950,7 +886,7 @@ def _apply_near_dedup(spark, store, verdicts, committed):
                 lag = lag.join(
                     pruned.select(F.col("id").alias("doc_id")), "doc_id", "left_anti"
                 )
-            lag_idx = minhash_index(lag, "doc_id", "clean_text", **_ND_IDX_KW)
+            lag_idx = spec.build_index(lag)
             reconciled = (
                 lag_idx if pruned is None else pruned.unionByName(lag_idx)
             )
@@ -960,41 +896,95 @@ def _apply_near_dedup(spark, store, verdicts, committed):
             committed_idx = None
 
     committed_bands = None
-    if committed_idx is not None:
-        # the persisted band table is a pure DERIVED cache of the index
-        # (band keys only — rebuilt by projection, never by re-shingling);
-        # a row-count gate detects lag from a crash between the index and
-        # bands commits, or an index prune above
+    if committed_idx is not None:  # band gate
         committed_bands = bands_store.read(spark)
         n_idx = committed_idx.count()
         n_bands = committed_bands.count() if committed_bands is not None else -1
-        if n_bands != n_idx * _ND_NUM_BANDS:
+        if n_bands != n_idx * spec.bands_per_doc:
             bands_store.commit(
-                band_table(committed_idx, **_ND_BAND_KW),
+                spec.build_bands(committed_idx),
                 base=True,
-                partition_by=["band_pfx"],
+                partition_by=[spec.pfx_col],
             )
             committed_bands = bands_store.read(spark)
 
     kept = verdicts.filter("keep").select("doc_id", "clean_text")
-    # localCheckpoint: ONE shingling pass serves prefix discovery, the pair
-    # join, and the survivors commit (blocks freed by the caller once the
-    # index commit lands)
-    new_idx = minhash_index(kept, "doc_id", "clean_text", **_ND_IDX_KW).localCheckpoint()
-    new_bands = band_table(new_idx, **_ND_BAND_KW)
+    # localCheckpoint: ONE indexing pass serves banding, the pair join and
+    # the survivors commit
+    new_idx = spec.build_index(kept).localCheckpoint()
+    new_bands = spec.build_bands(new_idx)
+    if spec.checkpoint_bands:
+        new_bands = new_bands.localCheckpoint()
     if committed_bands is not None:
-        # static prefix pruning: committed bands are directory-partitioned
-        # by band_pfx, so filtering to the BATCH's own prefixes (<=16
-        # values, collected from the checkpointed new bands) prunes whole
-        # partitions from the scan — the per-batch read cost tracks the
-        # batch, not the corpus
-        pfx = [r[0] for r in new_bands.select("band_pfx").distinct().collect()]
-        committed_bands = committed_bands.filter(F.col("band_pfx").isin(pfx))
-    from puddin_spark.operators.similarity import band_occupancy
-
+        # static prefix pruning: filtering the partitioned committed bands
+        # to the BATCH's own prefixes (<=16 values) prunes whole partitions
+        # from the scan — the per-batch read cost tracks the batch
+        pfx = [r[0] for r in new_bands.select(spec.pfx_col).distinct().collect()]
+        committed_bands = committed_bands.filter(F.col(spec.pfx_col).isin(pfx))
+    band_col, bucket_col = spec.occupancy_cols
     occupancy = band_occupancy(
-        new_bands, committed_bands, band_col="band_ix", bucket_col="band_key"
+        new_bands, committed_bands, band_col=band_col, bucket_col=bucket_col
     )
+    drops, new_new, to_free = spec.pair(
+        new_idx, new_bands, committed_idx, committed_bands
+    )
+    if not new_new.isEmpty():
+        clusters = resolve_duplicate_clusters(new_new)
+        to_free.append(clusters)
+        drops = drops.unionByName(
+            clusters.filter("id != root").select(F.col("id").alias("doc_id"))
+        )
+    # materialize the (tiny) drop set, then free what produced it —
+    # nothing downstream re-reads it (drops' own checkpoint is the only
+    # surviving copy)
+    drops = drops.distinct().localCheckpoint()
+    _free(to_free)
+    updated = flip_verdicts_by_id(verdicts, drops, spec.label)
+    return updated, (spec, new_idx, new_bands, occupancy)
+
+
+def _commit_near_dedup(store, pending, verdicts) -> None:
+    """After the verdict commit: every sidecar's index, then its bands,
+    semi-joined to the final kept ids (NearDupSidecar). Frees the batch's
+    checkpoints — the indexes', the band rows' and, through `verdicts`,
+    the drop sets' — only once the last commit has landed."""
+    kept_ids = verdicts.filter("keep").select(F.col("doc_id").alias("id"))
+    written = []
+    for spec, new_idx, new_bands, occupancy in pending:
+        idx = new_idx.join(kept_ids, "id", "left_semi")
+        bands = new_bands.join(kept_ids, "id", "left_semi")
+        SnapshotStore(store.base / spec.index).commit(idx)
+        SnapshotStore(store.base / spec.bands).commit(
+            bands, lineage=occupancy, partition_by=[spec.pfx_col]
+        )
+        written += [idx, bands]
+    _free(written)
+
+
+# minhash sidecar parameters — ONE definition; the index, its band table,
+# and the incremental pair generation must agree bit-for-bit
+_ND_IDX_KW = dict(num_hashes=16, shingle_k=3, shingle_mode="word")
+_ND_BAND_KW = dict(num_hashes=16, band_size=2, hash_impl="md5")
+
+
+def _minhash_index(kept: DataFrame) -> DataFrame:
+    from puddin_spark.operators.dedup import minhash_index
+
+    return minhash_index(kept, "doc_id", "clean_text", **_ND_IDX_KW)
+
+
+def _minhash_bands(idx: DataFrame) -> DataFrame:
+    from puddin_spark.operators.dedup import band_table
+
+    return band_table(idx, **_ND_BAND_KW)
+
+
+def _minhash_pairs(new_idx, new_bands, committed_idx, committed_bands):
+    """Word-shingle Jaccard >= 0.5 pairs touching a new doc
+    (incremental_minhash_pairs), split on committed_side: a committed-side
+    pair drops its NEW endpoint."""
+    from puddin_spark.operators.dedup import incremental_minhash_pairs
+
     pairs = incremental_minhash_pairs(
         new_idx,
         committed_idx,
@@ -1003,48 +993,13 @@ def _apply_near_dedup(spark, store, verdicts, committed):
         new_bands=new_bands,
         committed_bands=committed_bands,
     ).persist()
-    new_ids = kept.select(F.col("doc_id").alias("id"))
-    vs_committed = pairs.filter("committed_side")
     drops = (
-        vs_committed.join(new_ids, vs_committed.id_a == new_ids.id, "left_semi")
-        .select(F.col("id_a").alias("doc_id"))
-        .unionByName(
-            vs_committed.join(
-                new_ids, vs_committed.id_b == new_ids.id, "left_semi"
-            ).select(F.col("id_b").alias("doc_id"))
-        )
+        pairs.filter("committed_side")
+        .select(F.explode(F.array("id_a", "id_b")).alias("doc_id"))
+        .join(new_idx.select(F.col("id").alias("doc_id")), "doc_id", "left_semi")
     )
     new_new = pairs.filter("not committed_side").select("id_a", "id_b")
-    clusters = None
-    if not new_new.isEmpty():
-        clusters = resolve_duplicate_clusters(new_new)
-        drops = drops.unionByName(
-            clusters.filter("id != root").select(F.col("id").alias("doc_id"))
-        )
-    # materialize the (tiny) drop set, then free the pair cache and the
-    # cluster resolution's final checkpoint — nothing downstream re-reads
-    # either (drops' own eager checkpoint is the only surviving copy)
-    drops = drops.distinct().localCheckpoint()
-    pairs.unpersist()
-    if clusters is not None:
-        free_local_checkpoints(clusters)
-    drops = drops.withColumn("_nd", F.lit(True))
-    updated = (
-        verdicts.join(drops, "doc_id", "left")
-        .withColumn(
-            "keep", F.when(F.col("_nd"), F.lit(False)).otherwise(F.col("keep"))
-        )
-        .withColumn(
-            "excl_type",
-            F.when(F.col("_nd"), F.lit("near_dup")).otherwise(F.col("excl_type")),
-        )
-        .drop("_nd")
-        .select(*verdicts.columns)
-    )
-    survivors_idx = new_idx.join(
-        drops.select(F.col("doc_id").alias("id")), "id", "left_anti"
-    )
-    return updated, survivors_idx, idx_store, bands_store, occupancy
+    return drops, new_new, [pairs]
 
 
 # embedding near-dedup sidecar parameters. Banded SRP: num_bands bucket
@@ -1140,164 +1095,66 @@ def _srp_bands_table(idx: DataFrame, num_planes: int, num_bands: int) -> DataFra
     )
 
 
-def _apply_embedding_near_dedup(
-    spark, store, verdicts, committed, planes=None, bands=None
-):
-    """Flip embedding near-dup newcomers to keep=false /
-    excl_type='emb_near_dup'; return (updated_verdicts, index_of_survivors,
-    survivor_bands, srp_store, srp_bands_store, occupancy). Mirrors
-    _apply_near_dedup: the same (count, xor-of-ids) reconciliation gate on
-    the index, a row-count gate on the derived band cache, band-prefix
-    partition pruning for the committed-side scan, and the commit ordering
-    in run_resumable_pipeline's docstring. (planes, bands) resolve against
-    the sidecar's persisted _meta.json (_srp_meta).
-
-    The vs-COMMITTED flip runs through committed_srp_flip_ids (per-bucket
-    numpy cosine blocks, first-hit early exit, no pair-row
-    materialization — flip-set-identical to full enumeration); full pair
-    enumeration remains only where cluster resolution genuinely needs it:
-    new-vs-new. `occupancy` is the top-K
-    hottest (band, bucket) telemetry for this batch (new + pruned
-    committed membership) — committed as the srp_bands snapshot's lineage
-    so uncapped-bucket growth is observable per batch."""
-    from puddin_spark.operators.dedup import (
-        free_local_checkpoints,
-        resolve_duplicate_clusters,
-    )
+def _srp_pairs(new_idx, new_bands, committed_idx, committed_bands):
+    """Cosine >= 0.99 near-twins. vs-COMMITTED runs through
+    committed_srp_flip_ids (per-bucket numpy cosine blocks, first-hit
+    early exit, no pair rows — enumerating every (new, committed) bucket
+    co-member grew per-batch cost linearly with committed occupancy,
+    VERDICT r4). new-vs-new needs the whole edge set for cluster
+    resolution: srp_batch_pairs_matmul emits it from per-bucket numpy
+    blocks without materializing candidate rows (pair-set equality
+    pytest-pinned; the old enumerate-then-join shuffled ~2 GB of vectors
+    per 6k-doc batch)."""
     from puddin_spark.operators.similarity import (
-        band_occupancy,
         committed_srp_flip_ids,
         srp_batch_pairs_matmul,
     )
 
-    srp_store = SnapshotStore(store.base / "srp_index")
-    srp_bands_store = SnapshotStore(store.base / "srp_bands")
-    num_planes, num_bands = _srp_meta(srp_store.base, planes, bands)
-    committed_idx = srp_store.read(spark)
-    if committed is None:
-        committed_idx = _heal_stale_sidecar(srp_store, committed_idx)
-    if committed is not None:
-        # index<->corpus reconciliation (same shape as minhash: stale
-        # entries pruned, crash-lag entries re-encoded from committed
-        # clean_text, landed once as a base commit)
-        kept_committed = committed.filter("keep")
-        n_kept, fp_kept = _id_set_stats(kept_committed, "doc_id")
-        n_idx, fp_idx = (
-            _id_set_stats(committed_idx, "id")
-            if committed_idx is not None
-            else (0, 0)
-        )
-        if (n_idx, fp_idx) != (n_kept, fp_kept):
-            kept_ids = kept_committed.select(F.col("doc_id").alias("id"))
-            pruned = (
-                committed_idx.join(kept_ids, "id", "left_semi")
-                if committed_idx is not None
-                else None
-            )
-            lag = kept_committed.select("doc_id", "clean_text")
-            if pruned is not None:
-                lag = lag.join(
-                    pruned.select(F.col("id").alias("doc_id")), "doc_id", "left_anti"
-                )
-            lag_idx = _srp_index_table(lag)
-            reconciled = (
-                lag_idx if pruned is None else pruned.unionByName(lag_idx)
-            )
-            srp_store.commit(reconciled, base=True)
-            committed_idx = srp_store.read(spark)
-        if committed_idx is not None and committed_idx.isEmpty():
-            committed_idx = None
-
-    committed_bands = None
+    drops = new_idx.select(F.col("id").alias("doc_id")).limit(0)
+    to_free = []
     if committed_idx is not None:
-        # the persisted band table is a pure DERIVED cache of the index
-        # (rebuilt by projection, never by re-encoding); a row-count gate
-        # detects lag from a crash between the index and bands commits or
-        # an index prune above
-        committed_bands = srp_bands_store.read(spark)
-        n_idx = committed_idx.count()
-        n_bands_rows = committed_bands.count() if committed_bands is not None else -1
-        if n_bands_rows != n_idx * num_bands:
-            srp_bands_store.commit(
-                _srp_bands_table(committed_idx, num_planes, num_bands),
-                base=True,
-                partition_by=["bucket_pfx"],
-            )
-            committed_bands = srp_bands_store.read(spark)
-
-    kept = verdicts.filter("keep").select("doc_id", "clean_text")
-    # localCheckpoint: ONE encoding pass serves band derivation, the pair
-    # join, and the survivors commit (blocks freed by the caller once the
-    # sidecar commits land)
-    new_idx = _srp_index_table(kept).localCheckpoint()
-    new_bands = _srp_bands_table(new_idx, num_planes, num_bands).localCheckpoint()
-    if committed_bands is not None:
-        # static prefix pruning: the committed band table is directory-
-        # partitioned by bucket_pfx, so filtering to the BATCH's own
-        # prefixes (<=16 values) prunes whole partitions from the scan;
-        # incremental_srp_band_pairs then semi-joins exact (band, bucket)
-        pfx = [r[0] for r in new_bands.select("bucket_pfx").distinct().collect()]
-        committed_bands = committed_bands.filter(F.col("bucket_pfx").isin(pfx))
-    occupancy = band_occupancy(new_bands, committed_bands)
-    flips = None
-    if committed_idx is not None:
-        # vs-committed: per-bucket numpy cosine blocks with first-hit early
-        # exit — pair rows are never materialized (enumerating every
-        # (new, committed) bucket co-member grew per-batch cost linearly
-        # with corpus-side occupancy — VERDICT r4, profiled in BASELINE.md)
         flips = committed_srp_flip_ids(
             new_idx, new_bands, committed_idx, committed_bands,
             min_cos=_SRP_ND_MIN_COS,
         )
-    # new-vs-new needs the whole edge set (cluster resolution), but not the
-    # enumerate-then-join shape: srp_batch_pairs_matmul emits the same pair
-    # set from per-bucket numpy blocks (pair-set equality pytest-pinned)
-    # without materializing bucket-co-member candidate rows or shuffling
-    # two vectors per candidate — measured 2M candidate rows / ~2 GB of
-    # shuffled vector payload per 6k-doc batch on the old path
+        drops = flips.select(F.col("new_id").alias("doc_id"))
+        to_free.append(flips)
     pairs = srp_batch_pairs_matmul(
         new_idx, new_bands, min_cos=_SRP_ND_MIN_COS
     ).persist()
-    drops = (
-        flips.select(F.col("new_id").alias("doc_id"))
-        if flips is not None
-        else kept.select("doc_id").limit(0)
+    return drops, pairs.select("id_a", "id_b"), to_free + [pairs]
+
+
+MINHASH_SIDECAR = NearDupSidecar(
+    index="minhash_index",
+    bands="minhash_bands",
+    label="near_dup",
+    build_index=_minhash_index,
+    build_bands=_minhash_bands,
+    bands_per_doc=_ND_BAND_KW["num_hashes"] // _ND_BAND_KW["band_size"],
+    pfx_col="band_pfx",
+    occupancy_cols=("band_ix", "band_key"),
+    pair=_minhash_pairs,
+)
+
+
+def _srp_sidecar(num_planes: int, num_bands: int) -> NearDupSidecar:
+    """The embedding sidecar at one band configuration (_srp_meta)."""
+    return NearDupSidecar(
+        index="srp_index",
+        bands="srp_bands",
+        label="emb_near_dup",
+        build_index=_srp_index_table,
+        build_bands=lambda idx: _srp_bands_table(idx, num_planes, num_bands),
+        bands_per_doc=num_bands,
+        pfx_col="bucket_pfx",
+        occupancy_cols=("band", "bucket"),
+        pair=_srp_pairs,
+        checkpoint_bands=True,
     )
-    new_new = pairs.select("id_a", "id_b")
-    clusters = None
-    if not new_new.isEmpty():
-        clusters = resolve_duplicate_clusters(new_new)
-        drops = drops.unionByName(
-            clusters.filter("id != root").select(F.col("id").alias("doc_id"))
-        )
-    drops = drops.distinct().localCheckpoint()
-    pairs.unpersist()
-    if flips is not None:
-        free_local_checkpoints(flips)
-    if clusters is not None:
-        free_local_checkpoints(clusters)
-    drops = drops.withColumn("_ed", F.lit(True))
-    updated = (
-        verdicts.join(drops, "doc_id", "left")
-        .withColumn(
-            "keep", F.when(F.col("_ed"), F.lit(False)).otherwise(F.col("keep"))
-        )
-        .withColumn(
-            "excl_type",
-            F.when(F.col("_ed"), F.lit("emb_near_dup")).otherwise(
-                F.col("excl_type")
-            ),
-        )
-        .drop("_ed")
-        .select(*verdicts.columns)
-    )
-    survivors_idx = new_idx.join(
-        drops.select(F.col("doc_id").alias("id")), "id", "left_anti"
-    )
-    survivor_bands = new_bands.join(
-        drops.select(F.col("doc_id").alias("id")), "id", "left_anti"
-    )
-    return (
-        updated, survivors_idx, survivor_bands, srp_store, srp_bands_store,
-        occupancy,
-    )
+
+
+SRP_SIDECAR = _srp_sidecar(_SRP_ND_PLANES_DEFAULT, _SRP_ND_BANDS_DEFAULT)
+# every sidecar, for maintenance that only needs the store names
+# (record_failures' prune, CLI `compact`)
+NEAR_DUP_SIDECARS = (MINHASH_SIDECAR, SRP_SIDECAR)

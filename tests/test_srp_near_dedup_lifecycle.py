@@ -218,6 +218,13 @@ def test_minhash_and_embedding_near_dedup_compose(spark, tmp_path):
     n_kept = v1.filter("keep").count()
     assert SnapshotStore(store.base / "minhash_index").read(spark).count() == n_kept
     assert SnapshotStore(store.base / "srp_index").read(spark).count() == n_kept
+    # sidecar-flipped rows obey the verdict contract: no text on a drop
+    from puddin_spark.validation import validate_run
+
+    summary, _ = validate_run(
+        pages.unionByName(mh_twin).unionByName(emb_twin), v1, digest_aware=True
+    )
+    assert "text_state" not in summary["by_type"]
 
 
 def test_srp_planes_persisted_and_guarded(spark, tmp_path):
